@@ -5,10 +5,10 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line: {"metric": ...,
 "sf": ...}.
 
 The headline suite is PINNED to BENCH_BASELINE.json's query set (the
-round-1 catalog), independent of the driver-catalog rotation
-(plans/rotation.py) — otherwise every rotation would silently change
-what the suite total measures and BENCH_r{N} would stop being
-comparable across rounds. Rotated-out queries are found in the twin
+round-1 catalog), independent of the declared driver catalog
+(plans/registry.DRIVER_CATALOG) — otherwise every edit to that tuple
+would silently change what the suite total measures and BENCH_r{N}
+would stop being comparable across rounds. Rotated-out queries are found in the twin
 registry; the timing contract is identical.
 
 Each query is timed over a full materialization (collect) after a

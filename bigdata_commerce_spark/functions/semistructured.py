@@ -17,7 +17,7 @@ took that path (the conform_schema/try_cast posture applied to JSON).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -73,10 +73,3 @@ def malformed_json_report(df: DataFrame, json_col: str) -> DataFrame:
             6,
         ).alias("malformed_frac"),
     )
-
-
-def variant_type_of(vcol: Column | str) -> Column:
-    """The variant value's runtime JSON type as a string (the
-    schema-discovery helper for an unfamiliar payload column)."""
-    c = F.col(vcol) if isinstance(vcol, str) else vcol
-    return F.schema_of_variant(c)

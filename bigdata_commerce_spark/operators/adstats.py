@@ -17,14 +17,10 @@ needed.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bigdata_commerce_spark.operators.topk import top_k_per_group
-
-
-def with_event_date(df: DataFrame, ts_col: str = "ts") -> DataFrame:
-    return df.withColumn("event_date", F.to_date(ts_col))
 
 
 def user_key_counts(
@@ -51,12 +47,6 @@ def blacklist(
         .select(user_col)
         .distinct()
     )
-
-
-def filter_blacklisted(stream_df: DataFrame, blacklist_df: DataFrame, user_col: str = "user_id") -> DataFrame:
-    """Stream-static anti-join replacing the reference's per-batch
-    driver-side blacklist read (``AdverStat.scala:54-69``)."""
-    return stream_df.join(F.broadcast(blacklist_df), user_col, "left_anti")
 
 
 def cumulative_stats(
@@ -87,33 +77,6 @@ def province_top3(
         [date_col, province_col],
         [F.desc("click_count"), F.asc(ad_col)],
         k=3,
-    )
-
-
-def minute_trend(
-    df: DataFrame,
-    ts_col: str = "ts",
-    ad_col: str = "ad_id",
-    window_minutes: int = 60,
-    slide_minutes: int = 1,
-) -> DataFrame:
-    """Req 10: per-minute sliding-window click counts
-    (``reduceByKeyAndWindow(Minutes(60), Minutes(1))`` —
-    ``AdverStat.scala:93-109``). Batch twin over event time:
-    ``window()`` produces every (window, ad) bucket a row belongs to.
-    """
-    return (
-        df.groupBy(
-            F.window(ts_col, f"{window_minutes} minutes", f"{slide_minutes} minutes"),
-            F.col(ad_col),
-        )
-        .agg(F.count(F.lit(1)).alias("click_count"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            ad_col,
-            "click_count",
-        )
     )
 
 

@@ -17,8 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-LEVELS = ("minute", "hour", "day")
-
 
 def rollup_ladder(
     events: DataFrame,

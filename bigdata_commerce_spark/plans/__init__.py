@@ -8,43 +8,41 @@ from bigdata_commerce_spark.plans import (  # noqa: F401
     catalog_relational_ext,
 )
 from bigdata_commerce_spark.plans.registry import (
-    ORACLES,
-    QUERIES,
-    TWIN_ORACLES,
-    TWIN_QUERIES,
+    DRIVER_CATALOG,
+    DRIVER_SLOT_CAP,
+    REGISTERED,
+    QueryFn,
 )
 
-# The SQL-surface twin must produce byte-identical results to the
-# DataFrame form — give it the same oracle (checked in pytest; twins
-# don't burn driver catalog slots).
-TWIN_ORACLES.setdefault("region_top3_parts_sql", ORACLES["region_top3_parts"])
 
-# Rotate this round's driver catalog: anchors stay, ~35 slots go to
-# queries the driver's independent gate has never checked (see
-# plans/rotation.py and ROTATION.md). Rotations apply in round order
-# so the ledger history stays executable.
-from bigdata_commerce_spark.plans.rotation import (  # noqa: E402
-    DEMOTE_R7,
-    DEMOTE_R8,
-    DEMOTE_R9,
-    DEMOTE_R10,
-    DEMOTE_R11,
-    DEMOTE_R12,
-    PROMOTE_R7,
-    PROMOTE_R8,
-    PROMOTE_R9,
-    PROMOTE_R10,
-    PROMOTE_R11,
-    PROMOTE_R12,
-    apply_rotation,
-)
+def _split_catalog() -> tuple[
+    dict[str, QueryFn], dict[str, str], dict[str, QueryFn], dict[str, str]
+]:
+    """Split the registry in one pass: the names in DRIVER_CATALOG (in
+    declared order) and their oracles, then every other name as a
+    twin. Loud on an unknown or duplicate name and on the slot cap."""
+    if len(DRIVER_CATALOG) > DRIVER_SLOT_CAP:
+        raise ValueError(
+            f"driver catalog over its {DRIVER_SLOT_CAP}-slot cap: {len(DRIVER_CATALOG)}"
+        )
+    dupes = sorted({n for n in DRIVER_CATALOG if DRIVER_CATALOG.count(n) > 1})
+    if dupes:
+        raise ValueError(f"duplicate driver catalog names: {dupes}")
+    unknown = sorted(set(DRIVER_CATALOG) - set(REGISTERED))
+    if unknown:
+        raise KeyError(f"driver catalog names not registered: {unknown}")
 
-apply_rotation()  # r6: PROMOTE_R6 / DEMOTE_R6
-apply_rotation(PROMOTE_R7, DEMOTE_R7)  # r7: closes the ledger
-apply_rotation(PROMOTE_R8, DEMOTE_R8)  # r8: maintenance (oldest-first)
-apply_rotation(PROMOTE_R9, DEMOTE_R9)  # r9: maintenance (oldest-first)
-apply_rotation(PROMOTE_R10, DEMOTE_R10)  # r10: maintenance (oldest-first)
-apply_rotation(PROMOTE_R11, DEMOTE_R11)  # r11: maintenance (oldest-first)
-apply_rotation(PROMOTE_R12, DEMOTE_R12)  # r12: maintenance (oldest-first)
+    driver = set(DRIVER_CATALOG)
+    queries, oracles, twins, twin_oracles = {}, {}, {}, {}
+    for name in (*DRIVER_CATALOG, *(n for n in REGISTERED if n not in driver)):
+        fn, oracle = REGISTERED[name]
+        fns, sqls = (queries, oracles) if name in driver else (twins, twin_oracles)
+        fns[name] = fn
+        if oracle is not None:
+            sqls[name] = oracle
+    return queries, oracles, twins, twin_oracles
+
+
+QUERIES, ORACLES, TWIN_QUERIES, TWIN_ORACLES = _split_catalog()
 
 __all__ = ["QUERIES", "ORACLES", "TWIN_QUERIES", "TWIN_ORACLES"]

@@ -29,7 +29,7 @@ from bigdata_commerce_spark.operators.sessionize import (
     visit_step_histogram,
 )
 from bigdata_commerce_spark.operators.topk import global_top_k, top_k_per_group
-from bigdata_commerce_spark.plans.registry import query, twin_query
+from bigdata_commerce_spark.plans.registry import query
 from bigdata_commerce_spark.sources.testdata import load_table
 
 
@@ -165,9 +165,7 @@ def top_orders_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "region_top3_parts",
-    oracle="""
+_REGION_TOP3_ORACLE = """
     WITH basic AS (
         SELECT r_name AS area, n_name AS nation, l_partkey
         FROM lineitem
@@ -191,8 +189,10 @@ def top_orders_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
            ranked.l_partkey, p_name, order_count, nation_list, rank
     FROM ranked JOIN part ON ranked.l_partkey = p_partkey
     WHERE rank <= 3
-    """,
-)
+    """
+
+
+@query("region_top3_parts", oracle=_REGION_TOP3_ORACLE)
 def region_top3_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Req-6 analog (AreaTop3Stat — ``AreaTop3Stat.scala:15-123``):
     top-3 parts per region with the distinct nation list and a CASE
@@ -359,7 +359,7 @@ _HISTOGRAM_SELECT = "SELECT COUNT(*) AS session_count,\n" + ",\n".join(
 ) + "\nFROM session_agg"
 
 
-@twin_query(
+@query(
     "sessionize_skew_bounded",
     oracle=f"WITH {_SESSION_CTE} SELECT user_id, ts, session_id FROM sess",
 )

@@ -20,7 +20,7 @@ from bigdata_commerce_spark.operators import (
 )
 from bigdata_commerce_spark.plans.catalog import _EVENTS_ORACLE_CTE, _events
 from bigdata_commerce_spark.operators import text as text_ops
-from bigdata_commerce_spark.plans.registry import query, twin_query
+from bigdata_commerce_spark.plans.registry import query
 from bigdata_commerce_spark.sources import commerce as _commerce
 from bigdata_commerce_spark.sources.testdata import load_table
 
@@ -88,7 +88,7 @@ FROM tok_docs
 """
 
 
-@twin_query("text_stats", oracle=_TEXT_STATS_SQL)
+@query("text_stats", oracle=_TEXT_STATS_SQL)
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document quality statistics — pure projection, no shuffle,
     stays in whole-stage codegen (operators/text.py). Twin slot:
@@ -158,7 +158,7 @@ def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TS_SIM_VEC = "list_reduce(list_transform(list_zip({a}, {b}), q -> q[1] * q[2]), (acc, x) -> acc + x)"
 
 
-@twin_query(
+@query(
     "ts_similar_users",
     oracle=f"""
     WITH per_bucket AS (
@@ -230,7 +230,7 @@ _CHUNK_ORACLE = f"""
     """
 
 
-@twin_query("chunk_documents", oracle=_CHUNK_ORACLE)
+@query("chunk_documents", oracle=_CHUNK_ORACLE)
 def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping token windows per document (256-token chunks,
     32-token overlap -> stride 224) — map-side array expressions + one
@@ -240,7 +240,7 @@ def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text_ops.chunk_documents(docs, chunk_tokens=256, overlap=32)
 
 
-@twin_query("chunk_documents_udtf", oracle=_CHUNK_ORACLE)
+@query("chunk_documents_udtf", oracle=_CHUNK_ORACLE)
 def chunk_documents_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME chunking computed through the Python UDTF surface
     (Spark 4 table function, Arrow-optimized, LATERAL join —
@@ -306,7 +306,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text_ops.quality_score(docs)
 
 
-@twin_query(
+@query(
     "corpus_report",
     oracle=f"""
     WITH stats AS ({_TEXT_STATS_SQL}),
@@ -492,7 +492,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _jaccard_pairs_cached(spark, sf_dir)
 
 
-@twin_query(
+@query(
     "dedup_containment",
     oracle=f"""
     WITH {_SHINGLE_CTE}
@@ -522,7 +522,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.containment_pairs(docs, threshold=0.8)
 
 
-@twin_query(
+@query(
     "top_bigrams",
     oracle=f"""
     WITH {_NORM_CTE}
@@ -559,7 +559,7 @@ def top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the multi-line CCNet mode is pytest-covered on a crafted fixture.
 _BOILER_MIN_DOCS = 400
 
-@twin_query(
+@query(
     "boilerplate_scrub",
     oracle=f"""
     WITH lines AS (
@@ -601,7 +601,7 @@ def boilerplate_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@twin_query(
+@query(
     "benchmark_contamination",
     oracle=f"""
     WITH {_SHINGLE_CTE}
@@ -651,7 +651,7 @@ def _mix_oracle() -> str:
     """
 
 
-@twin_query("mixture_sample", oracle=_mix_oracle())
+@query("mixture_sample", oracle=_mix_oracle())
 def mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-mix sampling (operators/mixing.py): per-source keep
     fractions applied by deterministic id-hash threshold — zero
@@ -716,7 +716,7 @@ def _minhash_sig_sql(num_hashes: int = 8) -> str:
     return f"SELECT id, {cols} FROM ex GROUP BY id"
 
 
-@twin_query(
+@query(
     "minhash_signatures",
     oracle=f"""
     WITH {_SHINGLE_CTE}
@@ -808,7 +808,7 @@ def _simhash_sql() -> str:
     """
 
 
-@twin_query("simhash_values", oracle=_simhash_sql())
+@query("simhash_values", oracle=_simhash_sql())
 def simhash_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """60-bit SimHash per document (nibble-arithmetic portable).
     Twin slot: ``dedup_simhash``'s driver-checked oracle embeds the
@@ -954,7 +954,7 @@ def embedding_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.lsh_ann_topk(emb, probes, k=5)
 
 
-@twin_query(
+@query(
     "embedding_ann_recall",
     oracle=f"""
     WITH exact AS (
@@ -1121,7 +1121,7 @@ LEFT JOIN dropped d USING (vec_id)
 """
 
 
-@twin_query("embedding_semdedup", oracle=_SEMDEDUP_ORACLE)
+@query("embedding_semdedup", oracle=_SEMDEDUP_ORACLE)
 def embedding_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023; operators/similarity.semdedup):
     md5-picked coarse clusters, within-cell dominance prune — a
@@ -1147,7 +1147,7 @@ def embedding_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ivf_topk(emb, probes, k=5, n_centroids=16, nprobe=4)
 
 
-@twin_query("embedding_ann_ivf_indexed", oracle=_IVF_ORACLE)
+@query("embedding_ann_ivf_indexed", oracle=_IVF_ORACLE)
 def embedding_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The build-once / search-many form of ``embedding_ann_ivf``: the
     corpus is written to parquet ``partitionBy`` cell (one broadcast
@@ -1225,7 +1225,7 @@ WHERE bit_count(CAST(xor(x.phash, y.phash) AS BIGINT)) <= 1
 """
 
 
-@twin_query("multimodal_phash_pairs", oracle=_PHASH_SQL)
+@query("multimodal_phash_pairs", oracle=_PHASH_SQL)
 def multimodal_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Media near-dup pairs by perceptual-hash hamming distance
     (operators/multimodal.media_phash_pairs): FEATURE_DIM sign bits
@@ -1294,7 +1294,7 @@ m AS (
 """
 
 
-@twin_query(
+@query(
     "multimodal_phash_wide",
     oracle=f"""
     WITH {_phash_wide_words_cte(_PHASH_WIDE_M_PLAIN)}
@@ -1322,7 +1322,7 @@ def multimodal_phash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@twin_query(
+@query(
     "multimodal_phash_wide_pairs",
     oracle=f"""
     WITH {_phash_wide_words_cte(_PHASH_WIDE_M_PLANTED)}
@@ -1367,7 +1367,7 @@ def multimodal_phash_wide_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.phash_words_hamming_pairs(h, n_words=4, max_hamming=3)
 
 
-@twin_query(
+@query(
     "multimodal_resize",
     oracle="""
     SELECT doc_id AS media_id,
@@ -1674,7 +1674,7 @@ GROUP BY lang
 """
 
 
-@twin_query("corpus_token_economics", oracle=_TOKEN_ECON_SQL)
+@query("corpus_token_economics", oracle=_TOKEN_ECON_SQL)
 def corpus_token_economics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer fertility per language — the mixture-budgeting
     data-card row (tokens-per-byte drives how many corpus bytes buy a
@@ -1847,7 +1847,7 @@ def salted_user_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return salted_count(ev, ["user_id"], F.col("event_id"), salt_buckets=16)
 
 
-@twin_query(
+@query(
     "incremental_dedup_novel",
     oracle=r"""
     WITH fp AS (
@@ -1895,7 +1895,7 @@ def incremental_dedup_novel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return inc.novel_documents(docs.where(F.col("doc_id") >= 250), store)
 
 
-@twin_query(
+@query(
     "source_capped_docs",
     oracle="""
     SELECT doc_id, source, CAST(rnk AS INT) AS source_rank
@@ -1923,7 +1923,7 @@ def source_capped_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cap_per_source(docs, quota=20).select("doc_id", "source", "source_rank")
 
 
-@twin_query(
+@query(
     "token_budget_docs",
     oracle=f"""
     WITH {_NORM_CTE}
@@ -1967,7 +1967,7 @@ def token_budget_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return token_budget_per_source(counted, budget=800)
 
 
-@twin_query(
+@query(
     "token_budget_fill",
     oracle=f"""
     WITH {_NORM_CTE}
@@ -2034,7 +2034,7 @@ def token_budget_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     return token_budget_fill_report(kept, 800, available=counted)
 
 
-@twin_query(
+@query(
     "length_bucketed_docs",
     oracle=f"""
     WITH {_NORM_CTE}
@@ -2087,7 +2087,7 @@ def length_bucketed_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@twin_query(
+@query(
     "temperature_token_mix",
     oracle=f"""
     WITH {_NORM_CTE}
@@ -2167,7 +2167,7 @@ def temperature_token_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return token_budget_per_source(counted, budgets)
 
 
-@twin_query(
+@query(
     "cross_corpus_links",
     oracle=f"""
     WITH {_SHINGLE_CTE}
@@ -2202,7 +2202,7 @@ def cross_corpus_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@twin_query(
+@query(
     "documents_global_index",
     oracle="""
     SELECT doc_id, CAST(ROW_NUMBER() OVER (ORDER BY doc_id) - 1 AS BIGINT) AS idx
@@ -2221,7 +2221,7 @@ def documents_global_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_global_index(docs).select("doc_id", "idx")
 
 
-@twin_query(
+@query(
     "documents_shuffled_index",
     oracle="""
     SELECT doc_id,
@@ -2279,7 +2279,7 @@ tok AS (
 """
 
 
-@twin_query(
+@query(
     "bm25_doc_scores",
     oracle=f"WITH {_BM25_CTE.strip()} SELECT doc_id, bm25 FROM bm",
 )
@@ -2318,7 +2318,7 @@ _QUANTIZE_CTE = """
 """
 
 
-@twin_query(
+@query(
     "embeddings_quantized_vec",
     oracle=f"WITH {_QUANTIZE_CTE} SELECT vec_id, qscale_r, qvec FROM q",
 )
@@ -2339,7 +2339,7 @@ def embeddings_quantized_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@twin_query(
+@query(
     "embeddings_quantized",
     oracle=f"""
     WITH {_QUANTIZE_CTE}
@@ -2410,7 +2410,7 @@ _NLL_DOCS_CTE = f"""
 """
 
 
-@twin_query(
+@query(
     "doc_char_bigram_nll",
     oracle=f"WITH {_NLL_DOCS_CTE} SELECT * FROM nll_docs",
 )
@@ -2426,7 +2426,7 @@ def doc_char_bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     return char_bigram_nll(docs)
 
 
-@twin_query(
+@query(
     "docs_bloom_semi",
     oracle="""
     SELECT d.doc_id, d.text, d.lang, d.source, d.n_chars
@@ -2452,7 +2452,7 @@ def docs_bloom_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bloom_semi_join(docs, keys, "doc_id", "vec_id")
 
 
-@twin_query(
+@query(
     "docs_bloom_anti",
     oracle="""
     SELECT d.doc_id, d.text, d.lang, d.source, d.n_chars
@@ -2512,7 +2512,7 @@ def _diff_versions(spark: SparkSession, sf_dir: str):
     return old, new
 
 
-@twin_query(
+@query(
     "events_snapshot_diff",
     oracle=f"""
     WITH {_DIFF_VERSIONS_CTE.strip()}
@@ -2588,7 +2588,7 @@ _PROFILE_ORACLE = " UNION ALL ".join(
 )
 
 
-@twin_query("events_profile", oracle=_PROFILE_ORACLE)
+@query("events_profile", oracle=_PROFILE_ORACLE)
 def events_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-pass column profiler (operators/profile.py) over every
     events column: counts, exact distinct cardinality, typed min/max,
@@ -2648,7 +2648,7 @@ SELECT doc_id, rank_lex, rank_sem, rrf, CAST(rank AS INT) AS rank FROM (
 """
 
 
-@twin_query("hybrid_search_rrf", oracle=_HYBRID_ORACLE)
+@query("hybrid_search_rrf", oracle=_HYBRID_ORACLE)
 def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval top-10: BM25 over the 3-term query fused with
     embedding-cosine similarity to probe vector 0 by reciprocal-rank
@@ -2687,7 +2687,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@twin_query(
+@query(
     "docs_editdist_join",
     oracle=r"""
     WITH a AS (SELECT doc_id, text FROM documents
@@ -2730,7 +2730,7 @@ def docs_editdist_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@twin_query(
+@query(
     "docs_weighted_sample",
     oracle="""
     SELECT doc_id, lang, n_chars, CAST(rn AS INT) AS rank FROM (
@@ -2766,7 +2766,7 @@ def docs_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@twin_query(
+@query(
     "dedup_canonical_docs",
     oracle=f"""
     WITH RECURSIVE {_CLUSTERS_CTE.strip()}
@@ -2864,7 +2864,7 @@ def _jl_oracle(flat: bool = False) -> str:
     """
 
 
-@twin_query("embeddings_jl_projected_vec", oracle=_jl_oracle())
+@query("embeddings_jl_projected_vec", oracle=_jl_oracle())
 def embeddings_jl_projected_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-d → 16-d Johnson–Lindenstrauss projection of the embedding
     corpus (similarity.random_projection): the SAME seeded plane
@@ -2877,7 +2877,7 @@ def embeddings_jl_projected_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.random_projection(emb)
 
 
-@twin_query("embeddings_jl_projected", oracle=_jl_oracle(flat=True))
+@query("embeddings_jl_projected", oracle=_jl_oracle(flat=True))
 def embeddings_jl_projected(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-slot form of the JL projection: `posexplode` to one
     scalar row per (vec_id, plane_id) — same bit-exact coordinates as
@@ -2944,7 +2944,7 @@ FROM grp GROUP BY doc_id, g
     )
 
 
-@twin_query("doc_duplicate_spans", oracle=_dupspan_sql(keep_first=False))
+@query("doc_duplicate_spans", oracle=_dupspan_sql(keep_first=False))
 def doc_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merged spans of corpus-duplicated 8-token runs per document
     (operators/dupspans.py — the Lee et al. 2022 ExactSubstr family):
@@ -3008,7 +3008,7 @@ FROM rebuilt
 )
 
 
-@twin_query("docs_scrubbed_dupspans", oracle=_SCRUB_SQL)
+@query("docs_scrubbed_dupspans", oracle=_SCRUB_SQL)
 def docs_scrubbed_dupspans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus with duplicated 8-token runs scrubbed, one canonical
     copy kept (dupspans.scrub_duplicate_spans — Lee et al. keep-one
@@ -3078,7 +3078,7 @@ def _linscore_sql() -> str:
     """
 
 
-@twin_query("doc_quality_linear_score", oracle=_linscore_sql())
+@query("doc_quality_linear_score", oracle=_linscore_sql())
 def doc_quality_linear_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Documents scored by a hashed-feature linear model
     (operators/linear_model.py — the fastText quality-filter seam):
@@ -3111,7 +3111,7 @@ def _group_split_sql() -> str:
     """
 
 
-@twin_query("docs_group_split", oracle=_group_split_sql())
+@query("docs_group_split", oracle=_group_split_sql())
 def docs_group_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """25% holdout decided by the SOURCE hash (mixing.split_by_group):
     every document of a source lands in the same split — the
@@ -3158,7 +3158,7 @@ FROM grp GROUP BY doc_id, g
 )
 
 
-@twin_query("doc_contaminated_spans", oracle=_CONTAM_SPAN_SQL)
+@query("doc_contaminated_spans", oracle=_CONTAM_SPAN_SQL)
 def doc_contaminated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token runs of the corpus appearing VERBATIM in the benchmark
     slice (dupspans.contaminated_spans — span-level refinement of the
@@ -3209,7 +3209,7 @@ SELECT doc_id, term, tfidf, rank FROM ranked WHERE rank <= 5
 """
 
 
-@twin_query("doc_tfidf_keywords", oracle=_TFIDF_SQL)
+@query("doc_tfidf_keywords", oracle=_TFIDF_SQL)
 def doc_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 characteristic terms per document by smoothed TF-IDF
     (text.tfidf_top_terms): one explode + one (doc, term) aggregate,
@@ -3252,7 +3252,7 @@ def _tag_phrases_sql() -> str:
     """
 
 
-@twin_query("doc_phrase_tags", oracle=_tag_phrases_sql())
+@query("doc_phrase_tags", oracle=_tag_phrases_sql())
 def doc_phrase_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every occurrence of a 4-phrase dictionary across the corpus
     (dupspans.tag_phrases — FlashText job on the window-fingerprint
@@ -3307,7 +3307,7 @@ SELECT query_id, neg_id, score, CAST(rank AS INT) AS rank FROM (
 """
 
 
-@twin_query("embedding_hard_negatives", oracle=_HARDNEG_SQL)
+@query("embedding_hard_negatives", oracle=_HARDNEG_SQL)
 def embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 hard negatives per query vector (similarity.
     mine_hard_negatives — the DPR/contrastive-training recipe):
@@ -3346,7 +3346,7 @@ seqs AS (
 """
 
 
-@twin_query(
+@query(
     "user_next_event_examples_vec",
     oracle=f"WITH {_SEQPAIRS_CTE} SELECT * FROM pairs",
 )
@@ -3368,7 +3368,7 @@ def user_next_event_examples_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@twin_query(
+@query(
     "user_next_event_examples",
     oracle=f"""
     WITH {_SEQPAIRS_CTE}
@@ -3433,7 +3433,7 @@ FROM j
 """
 
 
-@twin_query("embedding_centroid_drift", oracle=_CENTROID_DRIFT_SQL)
+@query("embedding_centroid_drift", oracle=_CENTROID_DRIFT_SQL)
 def embedding_centroid_drift_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid rotation between the even- and odd-vec_id
     halves of the embedding corpus (drift.embedding_centroid_drift —
@@ -3499,7 +3499,7 @@ def _funnel_sql() -> str:
     """
 
 
-@twin_query("corpus_curation_funnel", oracle=_funnel_sql())
+@query("corpus_curation_funnel", oracle=_funnel_sql())
 def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source survival counts through the curate() gate chain
     (text.curation_funnel): raw -> quality -> quality+lang -> unique
@@ -3559,7 +3559,7 @@ def _upsample_sql() -> str:
     """
 
 
-@twin_query("docs_upsampled_epochs", oracle=_upsample_sql())
+@query("docs_upsampled_epochs", oracle=_upsample_sql())
 def docs_upsampled_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Epoch-aware upsampled corpus (mixing.upsample_epochs): src1 x2,
     src2 x2.5, src3 x0.4, src0 dropped, everything else x1 — integer
@@ -3606,7 +3606,7 @@ FROM j
 """
 
 
-@twin_query("orders_customer_key_overlap", oracle=_KEY_OVERLAP_SQL)
+@query("orders_customer_key_overlap", oracle=_KEY_OVERLAP_SQL)
 def orders_customer_key_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pre-join diagnostic for orders.o_custkey vs customer.c_custkey
     (profile.join_key_overlap): each side collapses to distinct keys
@@ -3643,7 +3643,7 @@ FROM orders o LEFT JOIN scd s
 """
 
 
-@twin_query("orders_scd2_segment", oracle=_SCD2_SQL)
+@query("orders_scd2_segment", oracle=_SCD2_SQL)
 def orders_scd2_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every order joined to the customer-segment VERSION current at
     its own order date (operators/scd2.py): a two-version synthetic
@@ -3721,7 +3721,7 @@ def _rfm_sql() -> str:
     """
 
 
-@twin_query("customer_rfm_segments", oracle=_rfm_sql())
+@query("customer_rfm_segments", oracle=_rfm_sql())
 def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer RFM quartile scores over orders (operators/rfm.py):
     one hash aggregate, exact-percentile boundaries broadcast as a
@@ -3747,7 +3747,7 @@ FROM events
 """
 
 
-@twin_query("events_variant_fields", oracle=_VARIANT_SQL)
+@query("events_variant_fields", oracle=_VARIANT_SQL)
 def events_variant_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed field extraction from the JSON props payload through
     Spark 4's VARIANT type (functions/semistructured.variant_extract
@@ -3787,7 +3787,7 @@ GROUP BY user_id
 """
 
 
-@twin_query("user_decayed_value", oracle=_DECAYED_SQL)
+@query("user_decayed_value", oracle=_DECAYED_SQL)
 def user_decayed_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recency-weighted per-user value as of a fixed anchor
     (timeseries.decayed_sum_per_key, 7-day half-life): decay against
@@ -3834,7 +3834,7 @@ GROUP BY 1, 2
 """
 
 
-@twin_query("source_dup_matrix", oracle=_DUP_MATRIX_SQL)
+@query("source_dup_matrix", oracle=_DUP_MATRIX_SQL)
 def source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared-content pair counts per unordered source pair, keyed
     on the 8-token prefix fingerprint (prefix-grade provenance — the
@@ -3877,7 +3877,7 @@ GROUP BY event_type
 """
 
 
-@twin_query("event_value_percentile_bands", oracle=_BANDS_SQL)
+@query("event_value_percentile_bands", oracle=_BANDS_SQL)
 def event_value_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """p50/p95/p99/max of value per event type — the SLO/latency-band
     report shape: ONE hash aggregate, exact interpolated percentiles
@@ -4003,7 +4003,7 @@ def _messy_url():
 _CANON_URLS_SQL = f"WITH {_URL_CANON_CTE} SELECT doc_id, canonical_url, registered_domain FROM url_dom"
 
 
-@twin_query("documents_canonical_urls", oracle=_CANON_URLS_SQL)
+@query("documents_canonical_urls", oracle=_CANON_URLS_SQL)
 def documents_canonical_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document canonical URL + registered domain — the crawl
     pipeline's keying stage. Pure projection: zero shuffle, no UDF,
@@ -4014,7 +4014,7 @@ def documents_canonical_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "canonical_url", "registered_domain")
 
 
-@twin_query(
+@query(
     "host_capped_docs",
     oracle=f"""
     WITH {_URL_CANON_CTE}
@@ -4060,7 +4060,7 @@ GROUP BY canonical_url
 """
 
 
-@twin_query("url_dedup_survivors", oracle=_URL_DEDUP_SQL)
+@query("url_dedup_survivors", oracle=_URL_DEDUP_SQL)
 def url_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL-level dedup survivors (min doc_id per canonical URL) — the
     cheap pre-pass that runs BEFORE content dedup: one hash aggregate
@@ -4082,7 +4082,7 @@ GROUP BY registered_domain
 """
 
 
-@twin_query("url_host_report", oracle=_HOST_REPORT_SQL)
+@query("url_host_report", oracle=_HOST_REPORT_SQL)
 def url_host_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-registered-domain rows / distinct-URL / dup-ratio stats —
     the table a crawl operator reads to set per-domain quota caps
@@ -4100,7 +4100,7 @@ GROUP BY registered_domain
 """
 
 
-@twin_query("url_blocklist_survivors", oracle=_BLOCKLIST_SQL)
+@query("url_blocklist_survivors", oracle=_BLOCKLIST_SQL)
 def url_blocklist_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Domain-blocklist filtering: rows per registered domain after
     dropping a blocked domain — one left-anti equi-join (no forced
@@ -4181,7 +4181,7 @@ FROM s CROSS JOIN g
 """
 
 
-@twin_query("domain_concentration", oracle=_DOMAIN_CONC_SQL)
+@query("domain_concentration", oracle=_DOMAIN_CONC_SQL)
 def domain_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-mass concentration by registered domain
     (operators/concentration.py): per-domain char mass, share, and
@@ -4274,7 +4274,7 @@ def _gopher_sql() -> str:
     """
 
 
-@twin_query("gopher_quality_flags", oracle=_gopher_sql())
+@query("gopher_quality_flags", oracle=_gopher_sql())
 def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Gopher pretraining quality-filter rules (Rae et al. 2021
     §A1.1; the base of Dolma/RefinedWeb filters) as one flag per rule
@@ -4322,7 +4322,7 @@ FROM b2 CROSS JOIN e
 """
 
 
-@twin_query("quality_calibration_bins", oracle=_calibration_sql())
+@query("quality_calibration_bins", oracle=_calibration_sql())
 def quality_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability diagram + expected calibration error for the
     learned quality filter against the Gopher rule verdict as weak
@@ -4389,7 +4389,7 @@ WHERE t.rn <= 3 AND 2 * t.rn <= n.n AND t.prob - b.prob >= 0.05
 """
 
 
-@twin_query("preference_pairs", oracle=_preference_sql())
+@query("preference_pairs", oracle=_preference_sql())
 def preference_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DPO-style preference pairs mined from the quality score
     (operators/preference.py): within each (source, length-bucket)
@@ -4444,7 +4444,7 @@ FROM j JOIN b USING (grp)
 """
 
 
-@twin_query("ccnet_perplexity_buckets", oracle=_CCNET_SQL)
+@query("ccnet_perplexity_buckets", oracle=_CCNET_SQL)
 def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet head/middle/tail perplexity bucketing (Wenzek et al.
     2019) per language (operators/lm_quality.perplexity_buckets):
@@ -4528,7 +4528,7 @@ WHERE rn <= 20
 """
 
 
-@twin_query("source_unigram_kl", oracle=_UNIGRAM_KL_SQL)
+@query("source_unigram_kl", oracle=_UNIGRAM_KL_SQL)
 def source_unigram_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary-shift report between two sources
     (operators/lm_quality.unigram_kl_report): KL(P_src1 || P_src2)
@@ -4547,7 +4547,7 @@ def source_unigram_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     return unigram_kl_report(docs, "src1", "src2")
 
 
-@twin_query("dsir_importance_weights", oracle=_DSIR_SQL)
+@query("dsir_importance_weights", oracle=_DSIR_SQL)
 def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR data selection (Xie et al. 2023) with the English slice as
     the target distribution (operators/lm_quality.dsir_logratio): two
@@ -4595,7 +4595,7 @@ FROM v
 """
 
 
-@twin_query("c4_line_filter", oracle=_C4_SQL)
+@query("c4_line_filter", oracle=_C4_SQL)
 def c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The C4 line-level cleaning rules (Raffel et al. 2019 §2.2;
     operators/text.c4_line_filter): terminal-punctuation + >=5-word +
@@ -4633,7 +4633,7 @@ def _recipe_funnel_sql() -> str:
     """
 
 
-@twin_query("published_recipe_funnel", oracle=_recipe_funnel_sql())
+@query("published_recipe_funnel", oracle=_recipe_funnel_sql())
 def published_recipe_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher -> C4 -> CCNet -> DSIR composed as one progressive
     survivor funnel (operators/lm_quality.published_recipe_funnel) —
@@ -4677,7 +4677,7 @@ def _top_ngram_sql() -> str:
     """
 
 
-@twin_query("doc_top_ngram_coverage", oracle=_top_ngram_sql())
+@query("doc_top_ngram_coverage", oracle=_top_ngram_sql())
 def doc_top_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher repetition rules 2-4 (operators/text.
     top_ngram_char_fraction): per (doc, n in 2..4) the dominant word
@@ -4717,7 +4717,7 @@ def _encoding_quality_sql() -> str:
     """
 
 
-@twin_query("doc_encoding_quality", oracle=_encoding_quality_sql())
+@query("doc_encoding_quality", oracle=_encoding_quality_sql())
 def doc_encoding_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encoding-damage detection (operators/text.encoding_quality):
     U+FFFD / mojibake-marker / C0-control counts + clean verdict, all
@@ -4760,7 +4760,7 @@ def _encoding_repair_sql() -> str:
     """
 
 
-@twin_query("doc_encoding_repair", oracle=_encoding_repair_sql())
+@query("doc_encoding_repair", oracle=_encoding_repair_sql())
 def doc_encoding_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scan-speed mojibake repair (operators/encoding_repair
     .repair_encoding, the kernel encoding_quality defers to): chained

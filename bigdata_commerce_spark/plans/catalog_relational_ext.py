@@ -13,8 +13,12 @@ from pyspark.sql import functions as F
 
 from bigdata_commerce_spark.functions import money_sum
 from bigdata_commerce_spark.operators.asof import asof_join
-from bigdata_commerce_spark.plans.catalog import _EVENTS_ORACLE_CTE, _events
-from bigdata_commerce_spark.plans.registry import query, twin_query
+from bigdata_commerce_spark.plans.catalog import (
+    _EVENTS_ORACLE_CTE,
+    _REGION_TOP3_ORACLE,
+    _events,
+)
+from bigdata_commerce_spark.plans.registry import query
 from bigdata_commerce_spark.sources.testdata import load_table
 
 
@@ -55,7 +59,7 @@ def asof_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@twin_query(
+@query(
     "asof_skew_bounded",
     oracle=f"""
     WITH {_EVENTS_ORACLE_CTE},
@@ -94,7 +98,7 @@ def asof_skew_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@twin_query(
+@query(
     "events_running_value",
     oracle=f"""
     WITH {_EVENTS_ORACLE_CTE}
@@ -199,7 +203,7 @@ def users_click_no_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     return clickers.subtract(buyers)
 
 
-@twin_query(
+@query(
     "users_click_and_purchase",
     oracle="""
     SELECT user_id FROM events WHERE event_type = 'click'
@@ -297,14 +301,14 @@ def supplier_window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@twin_query("region_top3_parts_sql")
+@query("region_top3_parts_sql", oracle=_REGION_TOP3_ORACLE)
 def region_top3_parts_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL-surface parity (SURVEY.md §3.2): the area/top-3 pipeline as
     the reference writes it — a chain of temp views consumed by
     spark.sql — proving the engine's full SQL surface produces the
     same plan/result as the DataFrame form (views are logical plans;
-    the chain fuses into one physical plan). Twin slot: pytest asserts
-    row-identical output vs the driver-checked ``region_top3_parts``."""
+    the chain fuses into one physical plan). pytest also asserts
+    row-identical output vs ``region_top3_parts``."""
     from bigdata_commerce_spark.sources.testdata import register_views
 
     register_views(spark, sf_dir)
@@ -342,7 +346,7 @@ def region_top3_parts_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@twin_query(
+@query(
     "group_concat_distinct_udaf",
     oracle="""
     SELECT r_name AS area, l_partkey,
@@ -462,7 +466,7 @@ def price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@twin_query(
+@query(
     "latest_user_events",
     oracle="""
     SELECT user_id, event_id, ts, event_type, value FROM (
@@ -486,7 +490,7 @@ def latest_user_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return latest_by_key(ev, ["user_id"], "ts", tiebreak_col="event_id")
 
 
-@twin_query(
+@query(
     "cohort_retention",
     oracle="""
     WITH activity AS (
@@ -556,7 +560,7 @@ def exact_price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@twin_query(
+@query(
     "data_quality_report",
     oracle="""
     WITH base AS (
@@ -618,7 +622,7 @@ def data_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@twin_query(
+@query(
     "customer_kanonymity",
     oracle="""
     WITH classes AS (
@@ -724,7 +728,7 @@ FROM a GROUP BY campaign
 """
 
 
-@twin_query("multitouch_attribution", oracle=_attribution_sql())
+@query("multitouch_attribution", oracle=_attribution_sql())
 def multitouch_attribution_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U-shaped multi-touch attribution over the ad stream
     (operators/attribution.py): each purchase's value splits 40/20/40
@@ -812,7 +816,7 @@ FROM z
 """
 
 
-@twin_query("campaign_conversion_chi2", oracle=_chi2_sql())
+@query("campaign_conversion_chi2", oracle=_chi2_sql())
 def campaign_conversion_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-campaign conversion significance (operators/abtest.py):
     the one-vs-rest 2x2 chi-square over USERS — exposed (clicked the
@@ -891,7 +895,7 @@ FROM base JOIN ci USING (event_type)
 """
 
 
-@twin_query("events_value_bootstrap_ci", oracle=_bootstrap_sql())
+@query("events_value_bootstrap_ci", oracle=_bootstrap_sql())
 def events_value_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Poisson-bootstrap 95% confidence interval for the mean event
     value per event type (operators/bootstrap.py; Chamandy 2012 —
@@ -921,7 +925,7 @@ def events_value_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@twin_query(
+@query(
     "events_agg_refresh",
     oracle="""
     SELECT CAST(ts AS DATE) AS event_date, event_type,
@@ -969,7 +973,7 @@ def events_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@twin_query(
+@query(
     "events_key_skew",
     oracle="""
     WITH counts AS (
@@ -1003,7 +1007,7 @@ def events_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     return key_skew_report(ev, ["user_id"], k=20)
 
 
-@twin_query(
+@query(
     "lineitem_unpivot",
     oracle="""
     SELECT l_orderkey, l_linenumber, 'l_quantity' AS measure, l_quantity AS value FROM lineitem
@@ -1030,7 +1034,7 @@ def lineitem_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@twin_query(
+@query(
     "user_daily_value_locf",
     oracle="""
     WITH obs AS (
@@ -1075,7 +1079,7 @@ def user_daily_value_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@twin_query(
+@query(
     "events_grouping_sets",
     oracle="""
     SELECT event_type, CAST(ts AS DATE) AS event_date,
@@ -1106,7 +1110,7 @@ def events_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """)
 
 
-@twin_query(
+@query(
     "user_value_anomalies",
     oracle="""
     WITH series AS (
@@ -1208,7 +1212,7 @@ def _psi_oracle() -> str:
     """
 
 
-@twin_query("price_distribution_psi", oracle=_psi_oracle())
+@query("price_distribution_psi", oracle=_psi_oracle())
 def price_distribution_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution drift report (operators/drift.py): PSI of
     o_totalprice between the even-orderkey half (reference) and the
@@ -1227,7 +1231,7 @@ def price_distribution_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     return psi_report(ref, cur, "o_totalprice", n_bins=_PSI_BINS)
 
 
-@twin_query(
+@query(
     "events_value_ks",
     oracle="""
     WITH base AS (
@@ -1273,7 +1277,7 @@ def events_value_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ks_report(ev, "value", "event_type", "click", "view")
 
 
-@twin_query(
+@query(
     "user_hourly_ohlc",
     oracle="""
     WITH obs AS (
@@ -1311,7 +1315,7 @@ def user_hourly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ohlc_resample(ev, 3600, key_col="user_id")
 
 
-@twin_query(
+@query(
     "rate_capped_events",
     oracle="""
     SELECT event_id, user_id, event_type
@@ -1339,7 +1343,7 @@ def rate_capped_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@twin_query(
+@query(
     "events_ewma_value",
     oracle="""
     WITH RECURSIVE base AS (
@@ -1381,7 +1385,7 @@ def events_ewma_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("user_id", "event_id", "ts", "value", "ewma")
 
 
-@twin_query(
+@query(
     "customer_negative_parts",
     oracle="""
     WITH pos AS (
@@ -1438,7 +1442,7 @@ def customer_negative_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return negative_samples(positives, n_items, k=5, oversample=2)
 
 
-@twin_query(
+@query(
     "parts_bought_together",
     oracle="""
     WITH items AS (
@@ -1477,7 +1481,7 @@ def parts_bought_together(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cooccurrence_pmi(li, "l_orderkey", "l_partkey", min_pairs=2)
 
 
-@twin_query(
+@query(
     "user_window_funnel",
     oracle="""
     WITH RECURSIVE ev AS (
@@ -1536,7 +1540,7 @@ def user_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@twin_query(
+@query(
     "events_value_winsorized",
     oracle="""
     WITH b AS (
@@ -1569,7 +1573,7 @@ def events_value_winsorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("event_id", "event_type", "value", "value_w")
 
 
-@twin_query(
+@query(
     "user_value_robust_anomalies",
     oracle="""
     WITH series AS (
@@ -1616,7 +1620,7 @@ def user_value_robust_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     return robust_flag_anomalies(series, key_col="user_id", z_threshold=3.0)
 
 
-@twin_query(
+@query(
     "lineitem_corr_matrix",
     oracle="""
     WITH q AS (
@@ -1676,7 +1680,7 @@ def lineitem_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corr_matrix(li, ["l_quantity", "l_extendedprice", "l_discount"])
 
 
-@twin_query(
+@query(
     "user_value_trend",
     oracle="""
     WITH series AS (

@@ -36,8 +36,6 @@ from bigdata_commerce_spark.operators.topk import global_top_k, top_k_per_group
 class TaskParams:
     """JSON task params of the reference (``Constants.scala:72-82``)."""
 
-    start_date: str | None = None
-    end_date: str | None = None
     start_age: int | None = None
     end_age: int | None = None
     professionals: list[str] = field(default_factory=list)
@@ -53,18 +51,6 @@ def with_task_id(df: DataFrame, params: TaskParams) -> DataFrame:
     """Every output row stamped with the run's task UUID
     (``SessionStat.scala:32`` et al.)."""
     return df.withColumn("task_id", F.lit(params.task_id))
-
-
-def filter_actions_by_date(actions: DataFrame, params: TaskParams) -> DataFrame:
-    """Date-range scan predicate (``SessionStat.scala:701-710``) —
-    expressed on the typed column so it pushes down to parquet and
-    prunes date partitions."""
-    out = actions
-    if params.start_date:
-        out = out.where(F.col("action_date") >= F.lit(params.start_date).cast("date"))
-    if params.end_date:
-        out = out.where(F.col("action_date") <= F.lit(params.end_date).cast("date"))
-    return out
 
 
 def session_full_info(actions: DataFrame, user_info: DataFrame) -> DataFrame:
@@ -134,15 +120,6 @@ def session_random_extract(
 # --------------------------------------------------------------------------
 # Req 3 + 4
 # --------------------------------------------------------------------------
-
-
-def actions_of_sessions(actions: DataFrame, filtered_sessions: DataFrame) -> DataFrame:
-    """Restrict actions to surviving sessions — left-semi join
-    (the reference inner-joins and rebuilds the tuple,
-    ``SessionStat.scala:79-82``)."""
-    return actions.join(
-        filtered_sessions.select("session_id"), "session_id", "left_semi"
-    )
 
 
 def top10_categories(actions: DataFrame, params: TaskParams) -> DataFrame:

@@ -30,7 +30,7 @@ def test_fingerprint_stable_and_discriminating_smoke(spark):
 
 
 @pytest.mark.slow
-def test_headline_fingerprints_deterministic(spark):
+def test_headline_fingerprints_deterministic(spark, monkeypatch):
     """Unchanged code => unchanged fingerprints at fixed SF: two full
     passes over the pinned headline suite must agree
     fingerprint-for-fingerprint — and the 50 fingerprints must be
@@ -49,6 +49,9 @@ def test_headline_fingerprints_deterministic(spark):
     fingerprint instability."""
     from bench import reset_caches
 
+    # an exported warm flag turns reset_caches into a no-op, which
+    # would compare two different cache environments
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_WARM", raising=False)
     names = headline_names()
 
     def one_pass() -> dict[str, str]:

@@ -93,6 +93,15 @@ def test_req1_histogram_matches_pandas(tables, sessions, spark):
     assert row.task_id == params.task_id
 
 
+def test_task_params_rejects_date_range():
+    """Nothing filtered on a date range, so a caller who set one got
+    unfiltered results; the fields are gone and setting one fails."""
+    with pytest.raises(TypeError):
+        C.TaskParams(start_date="2024-03-01")
+    with pytest.raises(TypeError):
+        C.TaskParams(end_date="2024-03-31")
+
+
 def test_req1_filters_apply(tables, sessions):
     params = C.TaskParams(start_age=20, end_age=40, sex="male")
     filtered = C.filter_sessions(sessions, params)

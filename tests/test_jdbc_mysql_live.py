@@ -3,8 +3,7 @@
 tests/test_jdbc_dialects.py, but only execution against a real server
 proves the two-statement upsert, the error-code markers, and the
 VARCHAR(32) __kh index width. No MySQL server (or Connector/J jar)
-exists in this sandbox, so the suite is env-gated — the
-transformWithStateInPandas protobuf-skip pattern — and self-skips
+exists in this sandbox, so the suite is env-gated and self-skips
 cleanly here. The day an environment provides one:
 
     export SPARK_GRAFT_MYSQL_URL='jdbc:mysql://host:3306/db'
