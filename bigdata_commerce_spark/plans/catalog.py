@@ -216,19 +216,21 @@ def region_top3_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # centroid bounded-collect pattern; 25 rows, build-time).
     # Identical output: filter() preserves the literal array's
     # name-ascending order, so the joined string equals
-    # array_join(array_sort(collect_set(nation)), ",").
+    # array_join(array_sort(collect_set(nation)), ","). The table has
+    # one entry per distinct non-NULL name, masking every key that
+    # carries it: a name shared by two keys prints once and a NULL
+    # name prints nothing, as collect_set would have it.
     nat_rows = nat.select("n_nationkey", "n_name").collect()
-    mask_safe = bool(nat_rows) and all(
-        r[0] is not None and 0 <= int(r[0]) < 63 for r in nat_rows
-    )
-    if mask_safe:
+    name_masks: dict[str, int] = {}
+    if all(r[0] is not None and 0 <= int(r[0]) < 63 for r in nat_rows):
+        for key, name in nat_rows:
+            if name is not None:
+                name_masks[name] = name_masks.get(name, 0) | 1 << int(key)
+    if name_masks:
         name_table = F.array(
             *[
-                F.struct(
-                    F.lit(1 << int(r[0])).cast("long").alias("m"),
-                    F.lit(r[1]).alias("nm"),
-                )
-                for r in sorted(nat_rows, key=lambda r: r[1])
+                F.struct(F.lit(mask).cast("long").alias("m"), F.lit(name).alias("nm"))
+                for name, mask in sorted(name_masks.items())
             ]
         )
         basic = (
@@ -263,7 +265,7 @@ def region_top3_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("nation_list"),
             )
         )
-    else:  # nation keys outside [0, 63) — fall back to the set form
+    else:  # nation keys outside [0, 63), or no names — the set form
         basic = (
             li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
             .join(F.broadcast(nat), sup.s_nationkey == nat.n_nationkey)

@@ -13,6 +13,12 @@ derived from the previous latest epoch + the batch. Re-running an
 epoch rewrites the same content — idempotent under micro-batch
 replay, which is exactly the guarantee the reference's DAOs lack.
 
+Reading state starts no Spark job: ``read_state`` takes the schema
+Spark wrote into a part file's footer and hands it to
+``spark.read.schema(...)``, so the parquet schema-inference job that
+every state read used to pay is gone. Nothing is cached, so a
+restarted process reads the same way.
+
 Full-state rewrite per epoch is the local-test compromise; the
 production backend with per-batch I/O proportional to the batch is
 ``streaming/jdbc_state.JdbcStateBackend`` — the same four merge
@@ -23,12 +29,14 @@ ledger), exercised end-to-end against embedded Derby in
 
 from __future__ import annotations
 
+import json
 import os
 import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 BatchFn = Callable[[DataFrame, int], None]
 
@@ -61,7 +69,26 @@ def read_state(
     latest = _latest_epoch(state_dir, before_epoch)
     if latest is None:
         return None
-    return spark.read.parquet(os.path.join(state_dir, f"epoch={latest}"))
+    epoch_dir = os.path.join(state_dir, f"epoch={latest}")
+    return spark.read.schema(_epoch_schema(epoch_dir)).parquet(epoch_dir)
+
+
+# Spark stores the writing DataFrame's schema in every part file's
+# footer under this key; a committed epoch always has at least one
+# part file (an empty write still produces one).
+_ROW_METADATA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _epoch_schema(epoch_dir: str) -> T.StructType:
+    """The committed epoch's schema, read from one part file's footer
+    on the driver: ``spark.read.parquet`` would start a Spark job to
+    infer it. The footer may mark columns non-nullable; the file
+    source makes a given schema nullable, as inference does."""
+    import pyarrow.parquet as pq
+
+    part = next(f for f in sorted(os.listdir(epoch_dir)) if f.startswith("part-"))
+    meta = pq.read_schema(os.path.join(epoch_dir, part)).metadata
+    return T.StructType.fromJson(json.loads(meta[_ROW_METADATA_KEY]))
 
 
 # Committed epochs kept per state dir. One committed predecessor is

@@ -356,3 +356,55 @@ def test_region_top3_bitmask_aggregate(spark):
     plan = _formatted(QUERIES["region_top3_parts"](spark, SF_SMOKE))
     assert "ObjectHashAggregate" not in plan, plan[:1200]
     assert "bit_or" in plan
+
+
+def _region_dims(sf_dir, key_offset: int) -> None:
+    """Adversarial region_top3_parts inputs: nation keys 0 and 1 share
+    the name FRANCE and key 2 has a NULL name. ``key_offset`` shifts
+    every nation key (>= 63 forces the collect_set form)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def write(name, **cols):
+        pq.write_table(pa.table(cols), str(sf_dir / f"{name}.parquet"))
+
+    keys = [k + key_offset for k in range(5)]
+    write(
+        "nation",
+        n_nationkey=pa.array(keys, pa.int32()),
+        n_name=pa.array(["FRANCE", "FRANCE", None, "GERMANY", "BRAZIL"]),
+        n_regionkey=pa.array([0, 0, 0, 0, 1], pa.int32()),
+    )
+    write("region", r_regionkey=pa.array([0, 1], pa.int32()), r_name=["EUROPE", "AMERICA"])
+    write(
+        "supplier",
+        s_suppkey=pa.array(range(5), pa.int64()),
+        s_nationkey=pa.array(keys, pa.int32()),
+    )
+    write("part", p_partkey=pa.array(range(1, 5), pa.int64()), p_name=["p1", "p2", "p3", "p4"])
+    # (partkey, suppkey): part 1 from both FRANCE keys and GERMANY,
+    # part 2 only from the NULL-named nation, part 3 from NULL and
+    # GERMANY, part 4 from BRAZIL
+    li = [(1, 0), (1, 1), (1, 3), (2, 2), (3, 2), (3, 3), (4, 4)]
+    write(
+        "lineitem",
+        l_partkey=pa.array([p for p, _ in li], pa.int64()),
+        l_suppkey=pa.array([s for _, s in li], pa.int64()),
+    )
+
+
+def test_region_top3_bitmask_handles_shared_and_null_nation_names(spark, tmp_path):
+    """The bitmask nation decode must print what collect_set prints: a
+    name shared by two keys once, a NULL name not at all (and not raise
+    while the query is built)."""
+    masked_dir, set_dir = tmp_path / "masked", tmp_path / "set"
+    for d, offset in ((masked_dir, 0), (set_dir, 100)):
+        d.mkdir()
+        _region_dims(d, offset)
+    masked = QUERIES["region_top3_parts"](spark, str(masked_dir))
+    fallback = QUERIES["region_top3_parts"](spark, str(set_dir))
+    assert "bit_or" in _formatted(masked)
+    assert "collect_set" in _formatted(fallback)
+    got = sorted(map(tuple, masked.collect()))
+    assert got == sorted(map(tuple, fallback.collect()))
+    assert {r[2]: r[5] for r in got} == {1: "FRANCE,GERMANY", 2: "", 3: "GERMANY", 4: "BRAZIL"}

@@ -4,7 +4,9 @@ the same rows, plus sink idempotency under epoch replay."""
 
 from __future__ import annotations
 
+import os
 import shutil
+import time
 from pathlib import Path
 
 import pytest
@@ -609,6 +611,90 @@ def test_ad_pipeline_soak_six_batches_with_midrun_restart(spark, tmp_path):
         )
     finally:
         events.unpersist()
+
+
+class _TrendFailsOnce:
+    """A parquet state backend whose trend sink raises once, at the
+    start of its first call in epoch 1, while the other two chains of
+    that epoch are still running."""
+
+    def __init__(self, inner) -> None:
+        self._inner = inner
+        self.raised = False
+
+    def __getattr__(self, name):
+        return getattr(self._inner, name)
+
+    def accumulate_sink(self, name, key_cols, value_col):
+        sink = self._inner.accumulate_sink(name, key_cols, value_col)
+        if name != "trend":
+            return sink
+
+        def fn(batch_df, epoch_id):
+            if epoch_id == 1 and not self.raised:
+                self.raised = True
+                raise RuntimeError("injected trend failure")
+            sink(batch_df, epoch_id)
+
+        return fn
+
+
+def _state_mtimes(work: str) -> dict[str, float]:
+    """mtime of every directory and file under the five state tables."""
+    out = {}
+    for table in ("user_counts", "blacklist", "cumulative", "top3", "trend"):
+        for root, _dirs, files in os.walk(os.path.join(work, table)):
+            out[root] = os.path.getmtime(root)
+            for f in files:
+                out[os.path.join(root, f)] = os.path.getmtime(os.path.join(root, f))
+    return out
+
+
+def test_ad_pipeline_failed_chain_fails_epoch_and_replays(spark, stream_result, tmp_path):
+    """The epoch runs its three sink chains concurrently. A chain that
+    raises must fail the epoch only after the other chains finished:
+    the query fails, and nothing under the state tables changes once
+    the failure reaches the caller. Restarting from the same checkpoint
+    replays the epoch and lands the state of an uninterrupted run."""
+    from pyspark.errors import StreamingQueryException
+
+    work = str(tmp_path / "state")
+    backend = _TrendFailsOnce(sinks.ParquetStateBackend(spark, work))
+    handles = pipelines.run_ad_pipeline(
+        pipelines.file_event_source(spark, str(SCRATCH / "flat")),
+        work,
+        blacklist_threshold=3,
+        backend=backend,
+    )
+    with pytest.raises(StreamingQueryException, match="injected trend failure"):
+        handles.process_all()
+    failed_at = time.time()
+    handles.stop()
+    assert backend.raised
+    written = _state_mtimes(work)
+    # epoch 1 of the other chains was written, and before the failure
+    # surfaced; nothing is written after it
+    assert os.path.isdir(os.path.join(work, "top3", "epoch=1"))
+    assert not os.path.isdir(os.path.join(work, "trend", "epoch=1"))
+    assert max(written.values()) <= failed_at
+    time.sleep(2)
+    assert _state_mtimes(work) == written
+
+    resumed = pipelines.run_ad_pipeline(
+        pipelines.file_event_source(spark, str(SCRATCH / "flat")),
+        work,
+        blacklist_threshold=3,
+        backend=backend,
+    )
+    resumed.process_all()
+    resumed.stop()
+    clean = stream_result["handles"].backend
+    for name in ("user_counts", "blacklist", "cumulative", "top3", "trend"):
+        want = clean.read_state(name)
+        got = backend.read_state(name).select(*want.columns)
+        assert sorted(map(tuple, got.collect())) == sorted(
+            map(tuple, want.collect())
+        ), name
 
 
 def test_jsonl_stream_fingerprints_match_batch(spark, tmp_path):
